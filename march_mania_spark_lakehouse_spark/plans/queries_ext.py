@@ -630,32 +630,17 @@ WHERE doc_id % 3 <> 0
 
 
 def _streaming_dedup_corpus(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
     import os
-    import tempfile
 
+    from march_mania_spark_lakehouse_spark.plans.lake_cache import cached_table
     from march_mania_spark_lakehouse_spark.sources import delta_log
     from march_mania_spark_lakehouse_spark.streaming.dedup import (
         process_dedup_batch,
     )
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"sdedup214|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        .encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    corpus_t = os.path.join(root, "corpus")
-    index_t = os.path.join(root, "index")
-    # the publish is three commits (corpus v0, index v0, batch body:
-    # corpus v1 + index v1); guard on the TERMINAL state or a crash
-    # mid-publish would poison the cache (the q212 lesson) — anything
-    # short of terminal is wiped and rebuilt
-    if delta_log.latest_version(corpus_t) != 1:
-        import shutil
-
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
+        corpus_t = os.path.join(root, "corpus")
+        index_t = os.path.join(root, "index")
         docs = catalog.load(spark, "documents", sf_dir).select(
             "doc_id", "text", "source", "n_chars"
         )
@@ -673,7 +658,9 @@ def _streaming_dedup_corpus(spark: SparkSession, sf_dir: str) -> str:
             spark, docs.filter(F.col("doc_id") % 3 == 0), 0,
             corpus_t, index_t, n=3, num_hashes=_Q28_K, bands=4,
         )
-    return corpus_t
+
+    root = cached_table("sdedup214", sf_dir, build)
+    return os.path.join(root, "corpus")
 
 
 @query("q214_streaming_dedup_loop", oracle=_Q214_SQL, tags=("dedup", "lake"))

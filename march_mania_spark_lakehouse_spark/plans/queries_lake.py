@@ -18,6 +18,7 @@ from march_mania_spark_lakehouse_spark import catalog
 from march_mania_spark_lakehouse_spark.functions.numeric import dsum, sql_dsum
 from march_mania_spark_lakehouse_spark.operators.graph import connected_components
 from march_mania_spark_lakehouse_spark.operators.merge import merge_upsert, scd2_apply
+from march_mania_spark_lakehouse_spark.plans.lake_cache import cached_table
 from march_mania_spark_lakehouse_spark.plans.registry import query
 from march_mania_spark_lakehouse_spark.sources import maintenance
 
@@ -328,30 +329,17 @@ GROUP BY o_orderstatus
 
 
 def _orders_lake_root(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent per-fixture publish of the clustered orders snapshot.
+    """Publish: the orders snapshot range-clustered on o_orderkey."""
 
-    The lake root is keyed by the source fixture's identity (path +
-    mtime + size), so a driver-regenerated fixture gets a fresh publish
-    instead of stale files — and repeated bench runs reuse the existing
-    version instead of republishing.
-    """
-    import hashlib
-    import tempfile
-
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_lake", fp)
-    if maintenance.latest_version(root) is None:
+    def build(root: str) -> None:
         clustered = (
             catalog.load(spark, "orders", sf_dir)
             .repartitionByRange(8, "o_orderkey")
             .sortWithinPartitions("o_orderkey")
         )
         maintenance.write_snapshot(clustered, root, stat_cols=["o_orderkey"])
-    return root
+
+    return cached_table("lake", sf_dir, build)
 
 
 @query("q129_manifest_pruned_scan", oracle=_Q129_SQL, tags=("lake", "agg"))
@@ -402,20 +390,10 @@ FROM v1 LEFT JOIN v0 USING (o_orderstatus)
 
 
 def _orders_delta_table(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent per-fixture Delta publish (same fingerprint scheme as
-    `_orders_lake_root`): v0 = orders with key%3=0, v1 appends key%3=1."""
-    import hashlib
-    import tempfile
-
+    """Publish: Delta v0 = orders with key%3=0, v1 appends key%3=1."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         delta_log.create(
             orders.filter(F.col("o_orderkey") % 3 == 0), table,
@@ -426,7 +404,8 @@ def _orders_delta_table(spark: SparkSession, sf_dir: str) -> str:
             stat_cols=["o_orderkey"],
         )
         delta_log.checkpoint(table)  # future replays: checkpoint + tail
-    return table
+
+    return cached_table("delta", sf_dir, build)
 
 
 @query("q131_delta_time_travel", oracle=_Q131_SQL, tags=("lake", "agg"))
@@ -484,25 +463,17 @@ GROUP BY 1
 
 
 def _orders_delta_partitioned(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-part|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
+    def build(table: str) -> None:
         delta_log.create(
             catalog.load(spark, "orders", sf_dir),
             table,
             stat_cols=["o_orderkey"],
             partition_by=["o_orderstatus"],
         )
-    return table
+
+    return cached_table("delta-part", sf_dir, build)
 
 
 @query("q143_delta_partition_scan", oracle=_Q143_SQL, tags=("lake", "agg"))
@@ -540,22 +511,14 @@ GROUP BY o_orderstatus
 
 
 def _orders_delta_incremental(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-incr|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         delta_log.create(orders.filter(F.col("o_orderkey") % 4 != 0), table)
         delta_log.append(orders.filter(F.col("o_orderkey") % 4 == 0), table)
-    return table
+
+    return cached_table("delta-incr", sf_dir, build)
 
 
 @query("q145_delta_incremental_refresh", oracle=_Q145_SQL, tags=("lake", "ivm"))
@@ -613,25 +576,16 @@ FROM s2 LEFT JOIN s1 USING (o_orderstatus)
 
 
 def _orders_iceberg_table(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent per-fixture Iceberg publish (fingerprint caching, the
-    q131 scheme): snapshot 1 = orders with key%3=0, snapshot 2 appends
-    key%3=1."""
-    import hashlib
-    import tempfile
-
+    """Publish: Iceberg snapshot 1 = orders with key%3=0, snapshot 2
+    appends key%3=1."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
         iceberg.append(orders.filter(F.col("o_orderkey") % 3 == 1), table)
-    return table
+
+    return cached_table("iceberg", sf_dir, build)
 
 
 @query("q177_iceberg_time_travel", oracle=_Q177_SQL, tags=("lake", "agg"))
@@ -693,18 +647,9 @@ def _orders_iceberg_stats_table(spark: SparkSession, sf_dir: str) -> str:
     """Like `_orders_iceberg_table` but range-partitioned on the key
     with per-file o_orderkey bounds recorded — the data-skipping shape
     (files cover disjoint key ranges, so a range scan prunes most)."""
-    import hashlib
-    import tempfile
-
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-stats|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         iceberg.create(
             orders.filter(F.col("o_orderkey") % 3 == 0)
@@ -718,7 +663,8 @@ def _orders_iceberg_stats_table(spark: SparkSession, sf_dir: str) -> str:
             table,
             stat_cols=("o_orderkey",),
         )
-    return table
+
+    return cached_table("iceberg-stats", sf_dir, build)
 
 
 @query("q178_iceberg_pruned_scan", oracle=_Q178_SQL, tags=("lake", "agg"))
@@ -759,24 +705,16 @@ GROUP BY o_orderstatus
 
 
 def _orders_iceberg_mor_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: snapshot 1 = orders with key%3=0,
-    snapshot 2 = merge-on-read DELETE of key%9=0 (tombstones only)."""
-    import hashlib
-    import tempfile
-
+    """Publish: snapshot 1 = orders with key%3=0, snapshot 2 =
+    merge-on-read DELETE of key%9=0 (tombstones only)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-mor|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
         iceberg.delete_where(spark, table, "o_orderkey % 9 = 0")
-    return table
+
+    return cached_table("iceberg-mor", sf_dir, build)
 
 
 @query("q180_iceberg_merge_on_read", oracle=_Q180_SQL, tags=("lake", "agg"))
@@ -827,21 +765,12 @@ FROM allrows GROUP BY o_orderstatus
 
 
 def _orders_iceberg_cdc_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: snapshot 1 = orders key%3=0 (3 cols),
-    then one CDC upsert batch — re-priced key%9=0 rows (update) plus
-    key-shifted copies of key%9=1&%3=1 rows (insert)."""
-    import hashlib
-    import tempfile
-
+    """Publish: snapshot 1 = orders key%3=0 (3 cols), then one CDC upsert
+    batch — re-priced key%9=0 rows (update) plus key-shifted copies of
+    key%9=1&%3=1 rows (insert)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-cdc|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -855,7 +784,8 @@ def _orders_iceberg_cdc_table(spark: SparkSession, sf_dir: str) -> str:
             .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(1_000_000_000))
         )
         iceberg.upsert(spark, table, updates.unionByName(inserts), ["o_orderkey"])
-    return table
+
+    return cached_table("iceberg-cdc", sf_dir, build)
 
 
 @query("q181_iceberg_cdc_upsert", oracle=_Q181_SQL, tags=("lake", "agg"))
@@ -900,27 +830,19 @@ GROUP BY event_type
 
 
 def _events_iceberg_day_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish of events under a day(ts) partition
-    spec (two appends, exercising multi-snapshot planning)."""
-    import hashlib
-    import tempfile
-
+    """Publishes events under a day(ts) partition spec (two appends,
+    exercising multi-snapshot planning)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-day|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         events = catalog.load(spark, "events", sf_dir)
         iceberg.create(
             events.filter(F.col("event_id") % 4 == 0), table,
             partition_by=["day(ts)"],
         )
         iceberg.append(events.filter(F.col("event_id") % 4 == 2), table)
-    return table
+
+    return cached_table("iceberg-day", sf_dir, build)
 
 
 @query("q182_iceberg_day_transform_scan", oracle=_Q182_SQL, tags=("lake", "agg"))
@@ -967,21 +889,13 @@ GROUP BY o_custkey
 
 
 def _orders_iceberg_bucket_table(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import tempfile
-
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-bucket|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         iceberg.create(orders, table, partition_by=["bucket(8, o_custkey)"])
-    return table
+
+    return cached_table("iceberg-bucket", sf_dir, build)
 
 
 @query("q183_iceberg_bucket_transform_lookup", oracle=_Q183_SQL, tags=("lake", "agg"))
@@ -1029,24 +943,16 @@ GROUP BY o_orderstatus
 
 
 def _orders_delta_dv_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v0 = orders with key%3=0, v1 =
-    deletion-vector DELETE of key%9=0 (bitmap sidecar only)."""
-    import hashlib
-    import tempfile
-
+    """Publish: v0 = orders with key%3=0, v1 = deletion-vector DELETE of
+    key%9=0 (bitmap sidecar only)."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-dv|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         delta_log.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
         delta_log.delete_where(spark, table, "o_orderkey % 9 = 0")
-    return table
+
+    return cached_table("delta-dv", sf_dir, build)
 
 
 @query("q184_delta_deletion_vectors", oracle=_Q184_SQL, tags=("lake", "agg"))
@@ -1090,23 +996,15 @@ GROUP BY o_orderstatus
 
 def _orders_delta_cdc_table(spark: SparkSession, sf_dir: str) -> str:
     """v0 = orders key%4!=0, v1 appends key%4=0, v2 DV-deletes key%5=0."""
-    import hashlib
-    import tempfile
-
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-cdc|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         delta_log.create(orders.filter(F.col("o_orderkey") % 4 != 0), table)
         delta_log.append(orders.filter(F.col("o_orderkey") % 4 == 0), table)
         delta_log.delete_where(spark, table, "o_orderkey % 5 = 0")
-    return table
+
+    return cached_table("delta-cdc", sf_dir, build)
 
 
 @query("q185_delta_cdc_refresh_with_deletes", oracle=_Q185_SQL, tags=("lake", "ivm"))
@@ -1223,30 +1121,13 @@ GROUP BY o_orderstatus
 
 
 def _orders_iceberg_v3_dv_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: snapshot 1 = orders key%3=0 on a
-    format_version=3 table, snapshot 2 = DV delete of key%9=0,
-    snapshot 3 = DV delete of key%5=0 (overlaps snapshot 2 at %45=0 —
-    exercising the executor-side merge of the previous DV). Guarded on
-    the TERMINAL snapshot count, not mere existence: a crash
-    mid-publish must rebuild, never poison the cache."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: snapshot 1 = orders key%3=0 on a format_version=3 table,
+    snapshot 2 = DV delete of key%9=0, snapshot 3 = DV delete of key%5=0
+    (overlaps snapshot 2 at %45=0 — exercising the executor-side merge of
+    the previous DV)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-v3-dv|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
-    if (
-        iceberg.current_version(table) is not None
-        and len(iceberg.snapshot_ids(table)) != 3
-    ):
-        shutil.rmtree(table)
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         iceberg.create(
             orders.filter(F.col("o_orderkey") % 3 == 0),
@@ -1255,7 +1136,8 @@ def _orders_iceberg_v3_dv_table(spark: SparkSession, sf_dir: str) -> str:
         )
         iceberg.delete_where(spark, table, "o_orderkey % 9 = 0")
         iceberg.delete_where(spark, table, "o_orderkey % 5 = 0")
-    return table
+
+    return cached_table("iceberg-v3-dv", sf_dir, build)
 
 
 @query("q216_iceberg_v3_deletion_vectors", oracle=_Q216_SQL, tags=("lake", "agg"))
@@ -1302,29 +1184,15 @@ GROUP BY o_orderstatus
 
 
 def _dv_interop_roundtrip_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Delta table of orders key%3=1, a DV
-    delete of key%7=0, then convert_from_delta → Iceberg v3 →
-    convert_to_delta. Returns the round-tripped Delta table. Guarded on
-    the TERMINAL artifact (the round-tripped log exists); a crash
-    mid-publish rebuilds from scratch."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: Delta table of orders key%3=1, a DV delete of key%7=0,
+    then convert_from_delta → Iceberg v3 → convert_to_delta. Returns the
+    round-tripped Delta table."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"dv-interop|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_dv_interop", fp)
-    d1 = os.path.join(root, "delta_src")
-    ice = os.path.join(root, "ice_mid")
-    d2 = os.path.join(root, "delta_back")
-    if os.path.exists(root) and delta_log.latest_version(d2) is None:
-        shutil.rmtree(root)  # partial publish: rebuild, never poison
-    if delta_log.latest_version(d2) is None:
+    def build(root: str) -> None:
+        d1 = os.path.join(root, "delta_src")
+        ice = os.path.join(root, "ice_mid")
+        d2 = os.path.join(root, "delta_back")
         orders = catalog.load(spark, "orders", sf_dir)
         delta_log.create(
             orders.filter(F.col("o_orderkey") % 3 == 1), d1
@@ -1332,7 +1200,9 @@ def _dv_interop_roundtrip_table(spark: SparkSession, sf_dir: str) -> str:
         delta_log.delete_where(spark, d1, "o_orderkey % 7 = 0")
         iceberg.convert_from_delta(d1, ice)
         iceberg.convert_to_delta(ice, d2)
-    return d2
+
+    root = cached_table("dv-interop", sf_dir, build)
+    return os.path.join(root, "delta_back")
 
 
 @query("q217_cross_format_dv_interop", oracle=_Q217_SQL, tags=("lake", "agg"))
@@ -1379,43 +1249,23 @@ GROUP BY o_orderstatus
 
 
 def _delta_sync_mirror_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Delta v0 = orders key%4=1 →
-    convert_from_delta → Delta v1 append of key%4=2 → Delta v2 DV
-    delete of key%5=0 → sync_from_delta. Returns the Iceberg mirror.
-    Guarded on the TERMINAL sync cursor (migrated-delta-version == 2);
-    a crash mid-publish rebuilds from scratch."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: Delta v0 = orders key%4=1 → convert_from_delta → Delta v1
+    append of key%4=2 → Delta v2 DV delete of key%5=0 → sync_from_delta.
+    Returns the Iceberg mirror."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-sync|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_delta_sync", fp)
-    dt = os.path.join(root, "delta_src")
-    it = os.path.join(root, "ice_mirror")
-
-    def _cursor() -> "str | None":
-        if iceberg.current_version(it) is None:
-            return None
-        return iceberg.current_metadata(it)["properties"].get(
-            "migrated-delta-version"
-        )
-
-    if os.path.exists(root) and _cursor() != "2":
-        shutil.rmtree(root)  # partial publish: rebuild, never poison
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        dt = os.path.join(root, "delta_src")
+        it = os.path.join(root, "ice_mirror")
         orders = catalog.load(spark, "orders", sf_dir)
         delta_log.create(orders.filter(F.col("o_orderkey") % 4 == 1), dt)
         iceberg.convert_from_delta(dt, it)
         delta_log.append(orders.filter(F.col("o_orderkey") % 4 == 2), dt)
         delta_log.delete_where(spark, dt, "o_orderkey % 5 = 0")
         iceberg.sync_from_delta(dt, it)
-    return it
+
+    root = cached_table("delta-sync", sf_dir, build)
+    return os.path.join(root, "ice_mirror")
 
 
 @query("q218_delta_to_iceberg_continuous_sync", oracle=_Q218_SQL, tags=("lake", "agg"))
@@ -1460,28 +1310,14 @@ GROUP BY o_orderstatus
 
 
 def _iceberg_sync_mirror_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Iceberg v3 snapshot 1 = orders
-    key%4=3 → convert_to_delta → snapshot 2 append of key%4=0 (key>0) →
-    snapshot 3 DV delete of key%7=0 → sync_to_delta. Returns the Delta
-    mirror. Guarded on the TERMINAL mirror version (one commit per
-    synced snapshot: CONVERT + 2 = version 2)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: Iceberg v3 snapshot 1 = orders key%4=3 → convert_to_delta
+    → snapshot 2 append of key%4=0 (key>0) → snapshot 3 DV delete of
+    key%7=0 → sync_to_delta. Returns the Delta mirror."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-sync|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_iceberg_sync", fp)
-    it = os.path.join(root, "ice_src")
-    dt = os.path.join(root, "delta_mirror")
-    if os.path.exists(root) and delta_log.latest_version(dt) != 2:
-        shutil.rmtree(root)  # partial publish: rebuild, never poison
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        it = os.path.join(root, "ice_src")
+        dt = os.path.join(root, "delta_mirror")
         orders = catalog.load(spark, "orders", sf_dir)
         iceberg.create(
             orders.filter(F.col("o_orderkey") % 4 == 3),
@@ -1497,7 +1333,9 @@ def _iceberg_sync_mirror_table(spark: SparkSession, sf_dir: str) -> str:
         )
         iceberg.delete_where(spark, it, "o_orderkey % 7 = 0")
         iceberg.sync_to_delta(it, dt)
-    return dt
+
+    root = cached_table("iceberg-sync", sf_dir, build)
+    return os.path.join(root, "delta_mirror")
 
 
 @query("q219_iceberg_to_delta_continuous_sync", oracle=_Q219_SQL, tags=("lake", "agg"))
@@ -1546,30 +1384,12 @@ GROUP BY o_orderstatus
 
 
 def _orders_lineage_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v3 snapshot 1 = orders key%3=2,
-    snapshot 2 = DV delete of key%5=0, snapshots 3+4 = update_where
-    (delete+append pair) bumping o_totalprice for key%7=0. Guarded on
-    the TERMINAL snapshot count (4)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: v3 snapshot 1 = orders key%3=2, snapshot 2 = DV delete of
+    key%5=0, snapshots 3+4 = update_where (delete+append pair) bumping
+    o_totalprice for key%7=0."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-lineage|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_iceberg_lineage", fp
-    )
-    if (
-        iceberg.current_version(table) is not None
-        and len(iceberg.snapshot_ids(table)) != 4
-    ):
-        shutil.rmtree(table)
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         iceberg.create(
             orders.filter(F.col("o_orderkey") % 3 == 2),
@@ -1581,7 +1401,8 @@ def _orders_lineage_table(spark: SparkSession, sf_dir: str) -> str:
             spark, table, "o_orderkey % 7 = 0",
             {"o_totalprice": F.col("o_totalprice") + 1.0},
         )
-    return table
+
+    return cached_table("iceberg-lineage", sf_dir, build)
 
 
 @query("q220_iceberg_v3_row_lineage", oracle=_Q220_SQL, tags=("lake", "agg"))
@@ -1631,30 +1452,12 @@ GROUP BY o_orderstatus
 
 
 def _orders_row_tracking_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Delta v0 = orders key%3=0 with
-    row_tracking=True, v1 = DV delete of key%5=0, v2+v3 = update_where
-    (delete+write pair) bumping o_totalprice for key%7=0. Guarded on
-    the TERMINAL version (3)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: Delta v0 = orders key%3=0 with row_tracking=True, v1 = DV
+    delete of key%5=0, v2+v3 = update_where (delete+write pair) bumping
+    o_totalprice for key%7=0."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-rowtracking|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_delta_rowtracking", fp
-    )
-    if (
-        delta_log.latest_version(table) is not None
-        and delta_log.latest_version(table) != 3
-    ):
-        shutil.rmtree(table)
-    if delta_log.latest_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         delta_log.create(
             orders.filter(F.col("o_orderkey") % 3 == 0),
@@ -1666,7 +1469,8 @@ def _orders_row_tracking_table(spark: SparkSession, sf_dir: str) -> str:
             spark, table, "o_orderkey % 7 = 0",
             {"o_totalprice": "o_totalprice + 1.0"},
         )
-    return table
+
+    return cached_table("delta-rowtracking", sf_dir, build)
 
 
 @query("q221_delta_row_tracking", oracle=_Q221_SQL, tags=("lake", "agg"))
@@ -1715,29 +1519,14 @@ GROUP BY o_orderstatus
 
 
 def _lineage_interop_tables(spark: SparkSession, sf_dir: str) -> "tuple[str, str]":
-    """Fingerprint-cached publish: Delta row-tracking table of orders
-    key%3=1, DV delete of key%6=2, UPDATE of key%9=4 (carried ids),
-    then convert_from_delta. Returns (delta, iceberg). Guarded on the
-    TERMINAL artifact (the converted table's metadata exists)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: Delta row-tracking table of orders key%3=1, DV delete of
+    key%6=2, UPDATE of key%9=4 (carried ids), then convert_from_delta.
+    Returns (delta, iceberg)."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"lineage-interop|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_lineage_interop", fp
-    )
-    dt = os.path.join(root, "delta_src")
-    it = os.path.join(root, "ice_dst")
-    if os.path.exists(root) and iceberg.current_version(it) is None:
-        shutil.rmtree(root)  # partial publish: rebuild, never poison
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        dt = os.path.join(root, "delta_src")
+        it = os.path.join(root, "ice_dst")
         orders = catalog.load(spark, "orders", sf_dir)
         delta_log.create(
             orders.filter(F.col("o_orderkey") % 3 == 1),
@@ -1750,6 +1539,10 @@ def _lineage_interop_tables(spark: SparkSession, sf_dir: str) -> "tuple[str, str
             {"o_totalprice": "o_totalprice + 1.0"},
         )
         iceberg.convert_from_delta(dt, it)
+
+    root = cached_table("lineage-interop", sf_dir, build)
+    dt = os.path.join(root, "delta_src")
+    it = os.path.join(root, "ice_dst")
     return dt, it
 
 
@@ -1797,30 +1590,12 @@ GROUP BY o_orderstatus
 
 
 def _orders_defaults_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v3 snapshot 1 = orders key%4=2
-    (3 columns), metadata-only add_column(score, default=7), snapshot 2
-    = orders key%4=3 WITH explicit score = key%100. Guarded on the
-    TERMINAL snapshot count (2)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: v3 snapshot 1 = orders key%4=2 (3 columns), metadata-only
+    add_column(score, default=7), snapshot 2 = orders key%4=3 WITH
+    explicit score = key%100."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"iceberg-defaults|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_iceberg_defaults", fp
-    )
-    if (
-        iceberg.current_version(table) is not None
-        and len(iceberg.snapshot_ids(table)) != 2
-    ):
-        shutil.rmtree(table)
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         base_cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
         iceberg.create(
@@ -1837,7 +1612,8 @@ def _orders_defaults_table(spark: SparkSession, sf_dir: str) -> str:
             ),
             table,
         )
-    return table
+
+    return cached_table("iceberg-defaults", sf_dir, build)
 
 
 @query("q223_iceberg_v3_column_defaults", oracle=_Q223_SQL, tags=("lake", "agg"))
@@ -1897,31 +1673,12 @@ WHERE o_orderkey % 4 = 1 AND o_orderkey % 5 <> 0 AND o_orderkey % 9 = 3
 
 
 def _snapshot_diff_table(spark: SparkSession, sf_dir: str) -> "tuple[str, int]":
-    """Fingerprint-cached publish: v3 snapshot 1 = orders key%4=1, then
-    DV delete key%5=0, update key%9=3 (+1 price), append key%4=0
-    (key>0). Returns (table, first snapshot id). Guarded on the
-    TERMINAL snapshot count (5: create, delete, update-delete,
-    update-append, append)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: v3 snapshot 1 = orders key%4=1, then DV delete key%5=0,
+    update key%9=3 (+1 price), append key%4=0 (key>0). Returns (table,
+    first snapshot id)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"snapshot-diff|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_snapshot_diff", fp
-    )
-    if (
-        iceberg.current_version(table) is not None
-        and len(iceberg.snapshot_ids(table)) != 5
-    ):
-        shutil.rmtree(table)
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         iceberg.create(
             orders.filter(F.col("o_orderkey") % 4 == 1),
@@ -1939,6 +1696,8 @@ def _snapshot_diff_table(spark: SparkSession, sf_dir: str) -> "tuple[str, int]":
             ),
             table,
         )
+
+    table = cached_table("snapshot-diff", sf_dir, build)
     first = iceberg.snapshot_ids(table)[0]
     return table, first
 
@@ -2043,30 +1802,12 @@ GROUP BY o_orderstatus
 
 
 def _orders_delta_defaults_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Delta v0 = orders key%4=1
-    (3 columns), v1 = metadata-only add_column(score, write_default=7),
-    v2 = append key%4=2 OMITTING score (filled 7), v3 = append key%4=3
-    with explicit score = key%50. Guarded on the TERMINAL version (3)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: Delta v0 = orders key%4=1 (3 columns), v1 = metadata-only
+    add_column(score, write_default=7), v2 = append key%4=2 OMITTING score
+    (filled 7), v3 = append key%4=3 with explicit score = key%50."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-defaults|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_delta_defaults", fp
-    )
-    if (
-        delta_log.latest_version(table) is not None
-        and delta_log.latest_version(table) != 3
-    ):
-        shutil.rmtree(table)
-    if delta_log.latest_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         base_cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
         delta_log.create(
@@ -2085,7 +1826,8 @@ def _orders_delta_defaults_table(spark: SparkSession, sf_dir: str) -> str:
             ),
             table,
         )
-    return table
+
+    return cached_table("delta-defaults", sf_dir, build)
 
 
 @query("q226_delta_write_time_defaults", oracle=_Q226_SQL, tags=("lake", "agg"))
@@ -2146,42 +1888,18 @@ GROUP BY o_orderstatus
 
 
 def _sync_schema_pair(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish of a Delta writer + Iceberg mirror
-    pair whose sync range carries the full schema-evolution menu:
-    v0 create (key%4=1; bucket INT), v1 add score (write_default 5),
-    v2 append key%4=2 omitting score, v3 enable mapping + v4 rename
-    o_totalprice→price, v5 widen bucket int→long, v6 add flag (mapped:
-    col-<uuid> physical name), v7 append key%4=3 with explicit values
-    (bucket beyond int range). Returns the MIRROR path; guarded on the
-    terminal Delta version (7) and the mirror's sync cursor."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publishes a Delta writer + Iceberg mirror pair whose sync range
+    carries the full schema-evolution menu: v0 create (key%4=1; bucket
+    INT), v1 add score (write_default 5), v2 append key%4=2 omitting
+    score, v3 enable mapping + v4 rename o_totalprice→price, v5 widen
+    bucket int→long, v6 add flag (mapped: col-<uuid> physical name), v7
+    append key%4=3 with explicit values (bucket beyond int range). Returns
+    the MIRROR path."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"sync-schema|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_sync_schema", fp
-    )
-    dt = os.path.join(root, "delta")
-    it = os.path.join(root, "ice")
-
-    def _terminal() -> bool:
-        if delta_log.latest_version(dt) != 7:
-            return False
-        if iceberg.current_version(it) is None:
-            return False
-        props = iceberg.current_metadata(it).get("properties", {})
-        return props.get("migrated-delta-version") == "7"
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        dt = os.path.join(root, "delta")
+        it = os.path.join(root, "ice")
         orders = catalog.load(spark, "orders", sf_dir)
         base = orders.select(
             "o_orderkey",
@@ -2192,9 +1910,7 @@ def _sync_schema_pair(spark: SparkSession, sf_dir: str) -> str:
         delta_log.create(
             base.filter(F.col("o_orderkey") % 4 == 1), dt
         )
-        from march_mania_spark_lakehouse_spark.sources import iceberg as ice
-
-        ice.convert_from_delta(dt, it)
+        iceberg.convert_from_delta(dt, it)
         delta_log.add_column(dt, "score", "bigint", write_default=5)
         delta_log.append(base.filter(F.col("o_orderkey") % 4 == 2), dt)
         delta_log.rename_column(dt, "o_totalprice", "price")
@@ -2211,8 +1927,10 @@ def _sync_schema_pair(spark: SparkSession, sf_dir: str) -> str:
             ),
             dt,
         )
-        ice.sync_from_delta(dt, it)
-    return it
+        iceberg.sync_from_delta(dt, it)
+
+    root = cached_table("sync-schema", sf_dir, build)
+    return os.path.join(root, "ice")
 
 
 # --------------------------------------------------------------------------
@@ -2251,38 +1969,15 @@ GROUP BY o_orderstatus
 
 
 def _migrated_ivm_pair(spark: SparkSession, sf_dir: str) -> "tuple[str, str, int]":
-    """Fingerprint-cached publish: Delta v0 = orders key%4=1 (row
-    tracking), v1 = DV delete key%10=7; `convert_from_delta` → Iceberg
-    snapshot 1; then ON ICEBERG: DV delete key%5=0, carried update
-    key%9=3 (+1 price), append key%4=0 (key>0). Returns (delta, ice,
-    conversion snapshot id). Guarded on the terminal snapshot count."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: Delta v0 = orders key%4=1 (row tracking), v1 = DV delete
+    key%10=7; `convert_from_delta` → Iceberg snapshot 1; then ON ICEBERG:
+    DV delete key%5=0, carried update key%9=3 (+1 price), append key%4=0
+    (key>0). Returns (delta, ice, conversion snapshot id)."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"migrated-ivm|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_migrated_ivm", fp
-    )
-    dt = os.path.join(root, "delta")
-    it = os.path.join(root, "ice")
-
-    def _terminal() -> bool:
-        return (
-            delta_log.latest_version(dt) == 1
-            and iceberg.current_version(it) is not None
-            and len(iceberg.snapshot_ids(it)) == 5
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        dt = os.path.join(root, "delta")
+        it = os.path.join(root, "ice")
         orders = catalog.load(spark, "orders", sf_dir)
         delta_log.create(
             orders.filter(F.col("o_orderkey") % 4 == 1).select(
@@ -2304,6 +1999,10 @@ def _migrated_ivm_pair(spark: SparkSession, sf_dir: str) -> "tuple[str, str, int
             ).select("o_orderkey", "o_orderstatus", "o_totalprice"),
             it,
         )
+
+    root = cached_table("migrated-ivm", sf_dir, build)
+    dt = os.path.join(root, "delta")
+    it = os.path.join(root, "ice")
     return dt, it, iceberg.snapshot_ids(it)[0]
 
 
@@ -2381,30 +2080,12 @@ GROUP BY o_orderstatus
 
 
 def _metadata_tables_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v3 table PARTITIONED by
-    o_orderstatus — snapshot 1 = create (key%4=1), snapshot 2 = append
-    (key%4=2), snapshot 3 = DV delete (key%10=3). Guarded on the
-    terminal snapshot count (3)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: v3 table PARTITIONED by o_orderstatus — snapshot 1 =
+    create (key%4=1), snapshot 2 = append (key%4=2), snapshot 3 = DV
+    delete (key%10=3)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"meta-tables|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_meta_tables", fp
-    )
-    if (
-        iceberg.current_version(table) is not None
-        and len(iceberg.snapshot_ids(table)) != 3
-    ):
-        shutil.rmtree(table)
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
         iceberg.create(
@@ -2418,7 +2099,8 @@ def _metadata_tables_fixture(spark: SparkSession, sf_dir: str) -> str:
             table,
         )
         iceberg.delete_where(spark, table, "o_orderkey % 10 = 3")
-    return table
+
+    return cached_table("meta-tables", sf_dir, build)
 
 
 @query("q229_metadata_partitions_table", oracle=_Q229_SQL, tags=("lake", "agg"))
@@ -2586,40 +2268,15 @@ GROUP BY o_orderstatus
 
 
 def _id_mapped_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v3 Iceberg orders (key%4=1, price
-    under its original name), convert_to_delta, rename
-    o_totalprice→price on the WRITER, append key%4=2 (files store the
-    NEW physical name), sync — the mirror flips to mode=id. Returns
-    the DELTA MIRROR path; guarded on the mirror's mapping mode."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: v3 Iceberg orders (key%4=1, price under its original
+    name), convert_to_delta, rename o_totalprice→price on the WRITER,
+    append key%4=2 (files store the NEW physical name), sync — the mirror
+    flips to mode=id. Returns the DELTA MIRROR path."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"id-mapped-mirror|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_id_mirror", fp
-    )
-    it = os.path.join(root, "ice")
-    dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None:
-            return False
-        md = delta_log._latest_metadata(dt, v)
-        return (md.get("configuration") or {}).get(
-            "delta.columnMapping.mode"
-        ) == "id"
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        it = os.path.join(root, "ice")
+        dt = os.path.join(root, "delta")
         orders = catalog.load(spark, "orders", sf_dir)
         iceberg.create(
             orders.filter(F.col("o_orderkey") % 4 == 1).select(
@@ -2639,7 +2296,9 @@ def _id_mapped_mirror(spark: SparkSession, sf_dir: str) -> str:
             it,
         )
         iceberg.sync_to_delta(it, dt)
-    return dt
+
+    root = cached_table("id-mapped-mirror", sf_dir, build)
+    return os.path.join(root, "delta")
 
 
 @query("q233_id_mapped_mirror_read", oracle=_Q233_SQL, tags=("lake", "agg"))
@@ -2680,40 +2339,12 @@ GROUP BY o_orderstatus
 
 
 def _rollback_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: snapshot 1 = orders key%4=1,
-    snapshot 2 = BAD append key%4=2, rollback to snapshot 1, snapshot 3
-    = append key%4=3 (parented on snapshot 1). Guarded on the terminal
-    shape (3 snapshots, head parented on the first)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: snapshot 1 = orders key%4=1, snapshot 2 = BAD append
+    key%4=2, rollback to snapshot 1, snapshot 3 = append key%4=3 (parented
+    on snapshot 1)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"rollback|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_rollback", fp
-    )
-
-    def _terminal() -> bool:
-        if iceberg.current_version(table) is None:
-            return False
-        meta = iceberg.current_metadata(table)
-        snaps = meta["snapshots"]
-        return (
-            len(snaps) == 3
-            and meta["current-snapshot-id"] == snaps[-1]["snapshot-id"]
-            and snaps[-1].get("parent-snapshot-id")
-            == snaps[0]["snapshot-id"]
-        )
-
-    if os.path.exists(table) and not _terminal():
-        shutil.rmtree(table)
-    if not os.path.exists(table):
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
         iceberg.create(
@@ -2731,7 +2362,8 @@ def _rollback_fixture(spark: SparkSession, sf_dir: str) -> str:
             orders.filter(F.col("o_orderkey") % 4 == 3).select(*cols),
             table,
         )
-    return table
+
+    return cached_table("rollback", sf_dir, build)
 
 
 @query("q234_rollback_to_snapshot", oracle=_Q234_SQL, tags=("lake", "agg"))
@@ -2775,43 +2407,14 @@ GROUP BY o_orderstatus
 
 
 def _partition_evolved_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: unpartitioned Delta orders key%4=1
-    → convert_from_delta → writer REPLACEs PARTITIONED BY
-    (o_orderstatus) → appends key%4=2 under the new layout → sync.
-    Returns the ICEBERG MIRROR path; guarded on the mirror's evolved
-    default spec and terminal synced version."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: unpartitioned Delta orders key%4=1 → convert_from_delta →
+    writer REPLACEs PARTITIONED BY (o_orderstatus) → appends key%4=2 under
+    the new layout → sync. Returns the ICEBERG MIRROR path."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"part-evolved|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_part_evolve", fp
-    )
-    dt = os.path.join(root, "delta")
-    it = os.path.join(root, "ice")
-
-    def _terminal() -> bool:
-        if iceberg.current_version(it) is None:
-            return False
-        v = delta_log.latest_version(dt)
-        meta = iceberg.current_metadata(it)
-        return (
-            v is not None
-            and meta.get("default-spec-id", 0) >= 1
-            and meta.get("properties", {}).get("migrated-delta-version")
-            == str(v)
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        dt = os.path.join(root, "delta")
+        it = os.path.join(root, "ice")
         orders = catalog.load(spark, "orders", sf_dir)
         cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
         delta_log.create(
@@ -2825,7 +2428,9 @@ def _partition_evolved_mirror(spark: SparkSession, sf_dir: str) -> str:
             dt,
         )
         iceberg.sync_from_delta(dt, it)
-    return it
+
+    root = cached_table("part-evolved", sf_dir, build)
+    return os.path.join(root, "ice")
 
 
 @query(
@@ -2874,38 +2479,14 @@ GROUP BY o_orderstatus
 
 
 def _rollback_synced_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Iceberg orders key%4=1 →
-    convert_to_delta → append BAD key%4=2 → sync (cursor lands ON the
-    bad snapshot) → rollback → append GOOD key%4=3 → sync
-    (compensates). Returns the DELTA MIRROR path; guarded on the
-    terminal compensating commit."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: Iceberg orders key%4=1 → convert_to_delta → append BAD
+    key%4=2 → sync (cursor lands ON the bad snapshot) → rollback → append
+    GOOD key%4=3 → sync (compensates). Returns the DELTA MIRROR path."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"rollback-sync|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_rollback_sync", fp
-    )
-    it = os.path.join(root, "ice")
-    dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None:
-            return False
-        _op, params = delta_log._commit_operation(dt, v)
-        return params.get("sourceOperation") == "sync-compensate"
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        it = os.path.join(root, "ice")
+        dt = os.path.join(root, "delta")
         orders = catalog.load(spark, "orders", sf_dir)
         cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
         iceberg.create(
@@ -2926,7 +2507,9 @@ def _rollback_synced_mirror(spark: SparkSession, sf_dir: str) -> str:
             it,
         )
         iceberg.sync_to_delta(it, dt)
-    return dt
+
+    root = cached_table("rollback-sync", sf_dir, build)
+    return os.path.join(root, "delta")
 
 
 @query(
@@ -3014,39 +2597,14 @@ GROUP BY o_orderstatus
 
 
 def _pos_delete_rewritten_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v2 Iceberg orders key%4=1 →
-    convert_to_delta → pos-delete key%10=7 → append key%4=2 →
-    sync_to_delta(rewrite='auto'). Returns the DELTA MIRROR path;
-    guarded on the terminal synced sequence."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: v2 Iceberg orders key%4=1 → convert_to_delta → pos-delete
+    key%10=7 → append key%4=2 → sync_to_delta(rewrite='auto'). Returns the
+    DELTA MIRROR path."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"posdel-rewrite|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_posdel_rw", fp
-    )
-    it = os.path.join(root, "ice")
-    dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None or iceberg.current_version(it) is None:
-            return False
-        _op, params = delta_log._commit_operation(dt, v)
-        return params.get("sourceSequence") == str(
-            iceberg.current_metadata(it)["last-sequence-number"]
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        it = os.path.join(root, "ice")
+        dt = os.path.join(root, "delta")
         orders = catalog.load(spark, "orders", sf_dir)
         cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
         iceberg.create(
@@ -3061,7 +2619,9 @@ def _pos_delete_rewritten_mirror(spark: SparkSession, sf_dir: str) -> str:
             it,
         )
         iceberg.sync_to_delta(it, dt, rewrite="auto")
-    return dt
+
+    root = cached_table("posdel-rewrite", sf_dir, build)
+    return os.path.join(root, "delta")
 
 
 @query(
@@ -3107,34 +2667,12 @@ GROUP BY o_orderstatus
 
 
 def _restored_layout_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: unpartitioned Delta orders key%4=1
-    (v0) → REPLACE PARTITIONED BY o_orderstatus (v1) → append key%4=2
-    (v2) → RESTORE to v0 (v3 — layout and metadata travel back) →
-    append key%4=3 (v4). Guarded on the terminal version + layout."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: unpartitioned Delta orders key%4=1 (v0) → REPLACE
+    PARTITIONED BY o_orderstatus (v1) → append key%4=2 (v2) → RESTORE to
+    v0 (v3 — layout and metadata travel back) → append key%4=3 (v4)."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"restored-layout|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_restored_layout", fp
-    )
-
-    def _terminal() -> bool:
-        return (
-            delta_log.latest_version(table) == 4
-            and delta_log.table_partition_columns(table) == []
-        )
-
-    if os.path.exists(table) and not _terminal():
-        shutil.rmtree(table)
-    if not os.path.exists(table):
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
         delta_log.create(
@@ -3151,7 +2689,8 @@ def _restored_layout_table(spark: SparkSession, sf_dir: str) -> str:
             orders.filter(F.col("o_orderkey") % 4 == 3).select(*cols),
             table,
         )
-    return table
+
+    return cached_table("restored-layout", sf_dir, build)
 
 
 @query(
@@ -3200,42 +2739,15 @@ GROUP BY o_orderstatus
 
 
 def _ice_relayout_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v3 Iceberg orders key%4=1
-    (unpartitioned) → convert_to_delta → repartition_table([status])
-    → append key%4=2 → sync → repartition_table([]) → append key%4=3
-    → sync. Returns the DELTA MIRROR path; guarded on the terminal
-    synced sequence + the flipped-back layout."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: v3 Iceberg orders key%4=1 (unpartitioned) →
+    convert_to_delta → repartition_table([status]) → append key%4=2 → sync
+    → repartition_table([]) → append key%4=3 → sync. Returns the DELTA
+    MIRROR path."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"ice-relayout|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_ice_relayout", fp
-    )
-    it = os.path.join(root, "ice")
-    dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None or iceberg.current_version(it) is None:
-            return False
-        _op, params = delta_log._commit_operation(dt, v)
-        return (
-            params.get("sourceSequence")
-            == str(iceberg.current_metadata(it)["last-sequence-number"])
-            and delta_log.table_partition_columns(dt) == []
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        it = os.path.join(root, "ice")
+        dt = os.path.join(root, "delta")
         orders = catalog.load(spark, "orders", sf_dir)
         cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
         iceberg.create(
@@ -3256,7 +2768,9 @@ def _ice_relayout_mirror(spark: SparkSession, sf_dir: str) -> str:
             it,
         )
         iceberg.sync_to_delta(it, dt)
-    return dt
+
+    root = cached_table("ice-relayout", sf_dir, build)
+    return os.path.join(root, "delta")
 
 
 @query(
@@ -3310,39 +2824,14 @@ GROUP BY o_orderstatus
 
 
 def _eq_delete_rewritten_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v2 Iceberg orders key%4=1 →
-    convert_to_delta → UPSERT (equality tombstone + append) bumping
-    key%10=3 prices by 1.0 → sync_to_delta(rewrite='auto'). Returns
-    the DELTA MIRROR path; guarded on the terminal synced sequence."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: v2 Iceberg orders key%4=1 → convert_to_delta → UPSERT
+    (equality tombstone + append) bumping key%10=3 prices by 1.0 →
+    sync_to_delta(rewrite='auto'). Returns the DELTA MIRROR path."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"eqdel-rewrite|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_eqdel_rw", fp
-    )
-    it = os.path.join(root, "ice")
-    dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None or iceberg.current_version(it) is None:
-            return False
-        _op, params = delta_log._commit_operation(dt, v)
-        return params.get("sourceSequence") == str(
-            iceberg.current_metadata(it)["last-sequence-number"]
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        it = os.path.join(root, "ice")
+        dt = os.path.join(root, "delta")
         orders = catalog.load(spark, "orders", sf_dir)
         cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
         base = orders.filter(F.col("o_orderkey") % 4 == 1).select(*cols)
@@ -3357,7 +2846,9 @@ def _eq_delete_rewritten_mirror(spark: SparkSession, sf_dir: str) -> str:
             ["o_orderkey"],
         )
         iceberg.sync_to_delta(it, dt, rewrite="auto")
-    return dt
+
+    root = cached_table("eqdel-rewrite", sf_dir, build)
+    return os.path.join(root, "delta")
 
 
 @query(
@@ -3404,39 +2895,14 @@ GROUP BY o_orderstatus
 
 
 def _expiry_synced_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: v3 Iceberg orders key%4=1 →
-    convert_to_delta → three rounds of (append key%4=r, expire
-    keep_last=1, sync). Returns the DELTA MIRROR path; guarded on the
-    terminal synced sequence and single-digit retained snapshots."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: v3 Iceberg orders key%4=1 → convert_to_delta → three
+    rounds of (append key%4=r, expire keep_last=1, sync). Returns the
+    DELTA MIRROR path."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"expiry-sync|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_expiry_sync", fp
-    )
-    it = os.path.join(root, "ice")
-    dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None or iceberg.current_version(it) is None:
-            return False
-        _op, params = delta_log._commit_operation(dt, v)
-        return params.get("sourceSequence") == str(
-            iceberg.current_metadata(it)["last-sequence-number"]
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        it = os.path.join(root, "ice")
+        dt = os.path.join(root, "delta")
         orders = catalog.load(spark, "orders", sf_dir)
         cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
         pos = orders.filter(F.col("o_orderkey") > 0)
@@ -3453,7 +2919,9 @@ def _expiry_synced_mirror(spark: SparkSession, sf_dir: str) -> str:
             )
             iceberg.expire_snapshots(it, keep_last=1)
             iceberg.sync_to_delta(it, dt)
-    return dt
+
+    root = cached_table("expiry-sync", sf_dir, build)
+    return os.path.join(root, "delta")
 
 
 @query(
@@ -3503,25 +2971,12 @@ GROUP BY o.o_orderstatus
 
 
 def _nested_orders_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: orders key%8=1 joined to an
-    array<struct> of their line items plus a struct header, written as
-    ONE Iceberg table with nested field-ids. Returns the table path."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: orders key%8=1 joined to an array<struct> of their line
+    items plus a struct header, written as ONE Iceberg table with nested
+    field-ids. Returns the table path."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"nested-orders|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_nested", fp)
-    it = os.path.join(root, "ice")
-    if os.path.exists(root) and iceberg.current_version(it) is None:
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(it: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir).filter(
             F.col("o_orderkey") % 8 == 1
         )
@@ -3555,7 +3010,8 @@ def _nested_orders_table(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         iceberg.create(nested, it)
-    return it
+
+    return cached_table("nested-orders", sf_dir, build)
 
 
 @query(
@@ -3616,37 +3072,14 @@ GROUP BY t.status, t.prio_class
 
 
 def _nested_evolution_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Iceberg orders key%4=2 with a
-    struct column → convert_to_delta → add_column('info.prio_class')
-    → append key%4=3 rows carrying it → sync. Returns the DELTA
-    MIRROR path; guarded on the terminal synced sequence."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: Iceberg orders key%4=2 with a struct column →
+    convert_to_delta → add_column('info.prio_class') → append key%4=3 rows
+    carrying it → sync. Returns the DELTA MIRROR path."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"nested-evo|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_nested_evo", fp)
-    it = os.path.join(root, "ice")
-    dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v is None or iceberg.current_version(it) is None:
-            return False
-        _op, params = delta_log._commit_operation(dt, v)
-        return params.get("sourceSequence") == str(
-            iceberg.current_metadata(it)["last-sequence-number"]
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        it = os.path.join(root, "ice")
+        dt = os.path.join(root, "delta")
         orders = catalog.load(spark, "orders", sf_dir)
         base = orders.filter(F.col("o_orderkey") % 4 == 2).select(
             "o_orderkey",
@@ -3668,7 +3101,9 @@ def _nested_evolution_mirror(spark: SparkSession, sf_dir: str) -> str:
         )
         iceberg.append(post, it)
         iceberg.sync_to_delta(it, dt)
-    return dt
+
+    root = cached_table("nested-evo", sf_dir, build)
+    return os.path.join(root, "delta")
 
 
 @query(
@@ -3722,25 +3157,12 @@ GROUP BY o_orderstatus
 
 
 def _nested_stats_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: orders key%6=1 as (o_orderkey,
-    info struct<price, status>), range-clustered on the nested price
-    and created with stat_cols=['info.price']."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: orders key%6=1 as (o_orderkey, info struct<price,
+    status>), range-clustered on the nested price and created with
+    stat_cols=['info.price']."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"nested-stats|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_nested_stats", fp)
-    it = os.path.join(root, "ice")
-    if os.path.exists(root) and iceberg.current_version(it) is None:
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(it: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir).filter(
             F.col("o_orderkey") % 6 == 1
         )
@@ -3752,7 +3174,8 @@ def _nested_stats_table(spark: SparkSession, sf_dir: str) -> str:
             ).alias("info"),
         )
         iceberg.create(nested, it, stat_cols=["info.price"])
-    return it
+
+    return cached_table("nested-stats", sf_dir, build)
 
 
 @query(
@@ -3799,32 +3222,11 @@ GROUP BY o_orderstatus
 
 
 def _cherry_picked_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: base key%12=1 → branch append
-    key%12=5 (audit) → main append key%12=9 (divergence) →
-    cherry_pick(audit head). Guarded on the terminal sequence (4 data
-    commits: create, branch append, main append, cherry-pick)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: base key%12=1 → branch append key%12=5 (audit) → main
+    append key%12=9 (divergence) → cherry_pick(audit head)."""
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"cherry-pick|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_cherry", fp)
-    it = os.path.join(root, "ice")
-
-    def _terminal() -> bool:
-        if iceberg.current_version(it) is None:
-            return False
-        return iceberg.current_metadata(it)["last-sequence-number"] == 4
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(it: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
 
@@ -3836,7 +3238,8 @@ def _cherry_picked_table(spark: SparkSession, sf_dir: str) -> str:
         staged = iceberg.append_to_branch(grp(5), it, "audit")
         iceberg.append(grp(9), it)  # main moves past the fork
         iceberg.cherry_pick(it, staged)
-    return it
+
+    return cached_table("cherry-pick", sf_dir, build)
 
 
 @query(
@@ -3881,35 +3284,11 @@ GROUP BY o_orderstatus
 
 
 def _reorg_purged_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Delta orders key%6=2 (4 files) →
-    DV delete key%30=2 → reorg_purge. Guarded on the terminal version
-    AND a DV-free head."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: Delta orders key%6=2 (4 files) → DV delete key%30=2 →
+    reorg_purge."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"reorg-purge|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_reorg", fp)
-    dt = os.path.join(root, "delta")
-
-    def _terminal() -> bool:
-        v = delta_log.latest_version(dt)
-        if v != 2:
-            return False
-        return not any(
-            a.get("deletionVector")
-            for a in delta_log._replay(dt, v).values()
-        )
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(dt: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         base = (
             orders.filter(F.col("o_orderkey") % 6 == 2)
@@ -3919,7 +3298,8 @@ def _reorg_purged_table(spark: SparkSession, sf_dir: str) -> str:
         delta_log.create(base, dt)
         delta_log.delete_where(spark, dt, "o_orderkey % 30 = 2")
         delta_log.reorg_purge(spark, dt)
-    return dt
+
+    return cached_table("reorg-purge", sf_dir, build)
 
 
 @query(
@@ -3973,39 +3353,15 @@ GROUP BY t.status, t.band
 
 
 def _delta_nested_evolution_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: Delta orders key%4=0 with a struct
-    column → convert_from_delta → delta add_column('info.band') →
-    append key%4=1 rows carrying it → sync_from_delta. Returns the
-    ICEBERG MIRROR path; guarded on the terminal synced version."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    """Publish: Delta orders key%4=0 with a struct column →
+    convert_from_delta → delta add_column('info.band') → append key%4=1
+    rows carrying it → sync_from_delta. Returns the ICEBERG MIRROR
+    path."""
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-nested-evo|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(
-        tempfile.gettempdir(), "spark_graft_dnested_evo", fp
-    )
-    dt = os.path.join(root, "delta")
-    it = os.path.join(root, "ice")
-
-    def _terminal() -> bool:
-        if iceberg.current_version(it) is None:
-            return False
-        v = delta_log.latest_version(dt)
-        if v is None:
-            return False
-        props = iceberg.current_metadata(it).get("properties") or {}
-        return props.get("migrated-delta-version") == str(v)
-
-    if os.path.exists(root) and not _terminal():
-        shutil.rmtree(root)
-    if not os.path.exists(root):
+    def build(root: str) -> None:
+        dt = os.path.join(root, "delta")
+        it = os.path.join(root, "ice")
         orders = catalog.load(spark, "orders", sf_dir).filter(
             F.col("o_orderkey") > 0
         )
@@ -4029,7 +3385,9 @@ def _delta_nested_evolution_mirror(spark: SparkSession, sf_dir: str) -> str:
         )
         delta_log.append(post, dt)
         iceberg.sync_from_delta(dt, it)
-    return it
+
+    root = cached_table("delta-nested-evo", sf_dir, build)
+    return os.path.join(root, "ice")
 
 
 @query(

@@ -8,16 +8,15 @@ PLAN, never the answer), so each oracle is the plain relational
 reconstruction over the source table — if the metadata machinery
 drops, duplicates, or resurrects a single row, the value hash breaks.
 
-Fixtures follow the queries_lake.py scheme: fingerprint-cached publish
-into tmp so repeated runs (bench, driver, pytest) reuse the published
-table, while a regenerated source fixture forces a fresh publish.
+Each fixture table is published once through `lake_cache.cached_table`
+and reused by repeated runs (benchmarks, tests, the entry point); a
+changed input file or a change to the package's code publishes it
+afresh.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,16 +24,8 @@ from pyspark.sql import functions as F
 
 from march_mania_spark_lakehouse_spark import catalog
 from march_mania_spark_lakehouse_spark.functions.numeric import dsum, sql_dsum
+from march_mania_spark_lakehouse_spark.plans.lake_cache import cached_table
 from march_mania_spark_lakehouse_spark.plans.registry import query
-
-
-def _cached_root(sf_dir: str, kind: str, src_table: str = "orders") -> str:
-    src = os.path.join(sf_dir, f"{src_table}.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"{kind}|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), "spark_graft_iceberg", fp)
 
 
 # --------------------------------------------------------------------------
@@ -58,8 +49,7 @@ GROUP BY o_orderstatus
 def _orders_iceberg_optimized(spark: SparkSession, sf_dir: str) -> str:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _cached_root(sf_dir, "iceberg-optimize")
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         iceberg.create(
             orders.filter(F.col("o_orderkey") % 3 == 0).repartition(6), table
@@ -69,7 +59,8 @@ def _orders_iceberg_optimized(spark: SparkSession, sf_dir: str) -> str:
         )
         iceberg.delete_where(spark, table, "o_orderkey % 9 = 0")
         iceberg.optimize(spark, table)  # 12 small files + tombstones → 1
-    return table
+
+    return cached_table("iceberg-optimize", sf_dir, build)
 
 
 @query("q188_iceberg_optimize_scan", oracle=_Q188_SQL, tags=("lake", "agg"))
@@ -116,8 +107,7 @@ GROUP BY o_orderstatus
 def _orders_iceberg_nullstats(spark: SparkSession, sf_dir: str) -> str:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _cached_root(sf_dir, "iceberg-nullstats")
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir).select(
             "o_orderkey",
             "o_orderstatus",
@@ -136,7 +126,8 @@ def _orders_iceberg_nullstats(spark: SparkSession, sf_dir: str) -> str:
             table,
             stat_cols=("o_orderkey", "mod7"),
         )
-    return table
+
+    return cached_table("iceberg-nullstats", sf_dir, build)
 
 
 @query("q189_iceberg_null_pruned_scan", oracle=_Q189_SQL, tags=("lake", "agg"))
@@ -178,18 +169,13 @@ GROUP BY o_orderstatus
 def _orders_delta_ts_table(spark: SparkSession, sf_dir: str) -> str:
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-ts|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         delta_log.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
         time.sleep(0.05)  # distinct commit timestamps
         delta_log.append(orders.filter(F.col("o_orderkey") % 3 == 1), table)
-    return table
+
+    return cached_table("delta-ts", sf_dir, build)
 
 
 def _v0_commit_ts(table: str) -> int:
@@ -231,13 +217,13 @@ _Q191_SQL = _Q190_SQL
 def _orders_iceberg_ts_table(spark: SparkSession, sf_dir: str) -> str:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _cached_root(sf_dir, "iceberg-ts")
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
         time.sleep(0.05)
         iceberg.append(orders.filter(F.col("o_orderkey") % 3 == 1), table)
-    return table
+
+    return cached_table("iceberg-ts", sf_dir, build)
 
 
 @query("q191_iceberg_timestamp_travel", oracle=_Q191_SQL, tags=("lake", "agg"))
@@ -281,8 +267,7 @@ GROUP BY o_orderstatus
 def _orders_iceberg_wap_table(spark: SparkSession, sf_dir: str) -> str:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _cached_root(sf_dir, "iceberg-wap")
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         iceberg.create(orders.filter(F.col("o_orderkey") % 4 == 0), table)
         n_base = orders.filter(F.col("o_orderkey") % 4 == 0).count()
@@ -300,7 +285,8 @@ def _orders_iceberg_wap_table(spark: SparkSession, sf_dir: str) -> str:
             )
         except iceberg.IcebergAuditError:
             pass
-    return table
+
+    return cached_table("iceberg-wap", sf_dir, build)
 
 
 @query("q192_iceberg_wap_publish", oracle=_Q192_SQL, tags=("lake", "agg"))
@@ -351,13 +337,13 @@ FROM head LEFT JOIN tagged USING (o_orderstatus)
 def _orders_iceberg_tagged_table(spark: SparkSession, sf_dir: str) -> str:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _cached_root(sf_dir, "iceberg-tag")
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir)
         iceberg.create(orders.filter(F.col("o_orderkey") % 3 == 0), table)
         iceberg.create_tag(table, "v1.0")
         iceberg.append(orders.filter(F.col("o_orderkey") % 3 == 1), table)
-    return table
+
+    return cached_table("iceberg-tag", sf_dir, build)
 
 
 @query("q193_iceberg_tag_diff", oracle=_Q193_SQL, tags=("lake", "agg"))
@@ -417,8 +403,7 @@ GROUP BY event_type
 def _events_iceberg_evolved_table(spark: SparkSession, sf_dir: str) -> str:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = _cached_root(sf_dir, "iceberg-evolve", src_table="events")
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         events = catalog.load(spark, "events", sf_dir)
         iceberg.create(
             events.filter(F.col("event_id") % 4 == 0), table,
@@ -426,7 +411,8 @@ def _events_iceberg_evolved_table(spark: SparkSession, sf_dir: str) -> str:
         )
         iceberg.evolve_partition_spec(table, ["hour(ts)"])
         iceberg.append(events.filter(F.col("event_id") % 4 == 2), table)
-    return table
+
+    return cached_table("iceberg-evolve", sf_dir, build)
 
 
 @query("q195_iceberg_partition_evolution", oracle=_Q195_SQL, tags=("lake", "agg"))
@@ -541,13 +527,7 @@ _Q198_SQL = _Q189_SQL
 def _orders_delta_nullstats(spark: SparkSession, sf_dir: str) -> str:
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    fp = hashlib.sha256(
-        f"delta-nullstats|{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:16]
-    table = os.path.join(tempfile.gettempdir(), "spark_graft_delta", fp)
-    if delta_log.latest_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir).select(
             "o_orderkey",
             "o_orderstatus",
@@ -566,7 +546,8 @@ def _orders_delta_nullstats(spark: SparkSession, sf_dir: str) -> str:
             table,
             stat_cols=["o_orderkey", "mod7"],
         )
-    return table
+
+    return cached_table("delta-nullstats", sf_dir, build)
 
 
 @query("q198_delta_null_pruned_scan", oracle=_Q198_SQL, tags=("lake", "agg"))
@@ -693,8 +674,7 @@ GROUP BY o_orderstatus
 def _orders_iceberg_evolved(spark: SparkSession, sf_dir: str) -> str:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = os.path.join(_cached_root(sf_dir, "evolved203"), "orders_ice")
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir).select(
             "o_orderkey",
             "o_custkey",
@@ -719,7 +699,8 @@ def _orders_iceberg_evolved(spark: SparkSession, sf_dir: str) -> str:
             table,
             stat_cols=["o_orderkey"],
         )
-    return table
+
+    return cached_table("evolved203", sf_dir, build)
 
 
 @query("q203_schema_evolution_read", oracle=_Q203_SQL, tags=("lake", "agg"))
@@ -757,11 +738,7 @@ _Q204_SQL = _Q203_SQL  # the evolution is semantically invisible
 def _orders_delta_mapped(spark: SparkSession, sf_dir: str) -> str:
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    root = _cached_root(sf_dir, "mapped204").replace(
-        "spark_graft_iceberg", "spark_graft_delta"
-    )
-    table = os.path.join(root, "orders_delta")
-    if delta_log.latest_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir).select(
             "o_orderkey",
             "o_custkey",
@@ -783,7 +760,8 @@ def _orders_delta_mapped(spark: SparkSession, sf_dir: str) -> str:
             table,
             stat_cols=["o_orderkey"],
         )
-    return table
+
+    return cached_table("mapped204", sf_dir, build)
 
 
 @query("q204_delta_column_mapping_read", oracle=_Q204_SQL, tags=("lake", "agg"))
@@ -838,17 +816,8 @@ GROUP BY status
 def _orders_updated(spark: SparkSession, sf_dir: str, layer: str) -> str:
     from march_mania_spark_lakehouse_spark.sources import delta_log, iceberg
 
-    root = _cached_root(sf_dir, f"updated206_{layer}")
-    if layer == "delta":
-        root = root.replace("spark_graft_iceberg", "spark_graft_delta")
-    table = os.path.join(root, f"orders_{layer}")
-    mod = iceberg if layer == "iceberg" else delta_log
-    exists = (
-        iceberg.current_version(table)
-        if layer == "iceberg"
-        else delta_log.latest_version(table)
-    )
-    if exists is None:
+    def build(table: str) -> None:
+        mod = iceberg if layer == "iceberg" else delta_log
         orders = catalog.load(spark, "orders", sf_dir).select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
         )
@@ -862,7 +831,8 @@ def _orders_updated(spark: SparkSession, sf_dir: str, layer: str) -> str:
                 "o_totalprice": F.col("o_totalprice") * F.lit(1.5),
             },
         )
-    return table
+
+    return cached_table(f"updated206_{layer}", sf_dir, build)
 
 
 def _updated_agg(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -928,8 +898,7 @@ GROUP BY o_orderstatus
 def _orders_iceberg_widened(spark: SparkSession, sf_dir: str) -> str:
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    table = os.path.join(_cached_root(sf_dir, "widened208"), "orders_ice")
-    if iceberg.current_version(table) is None:
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -946,7 +915,8 @@ def _orders_iceberg_widened(spark: SparkSession, sf_dir: str) -> str:
             table,
             stat_cols=["o_orderkey"],
         )
-    return table
+
+    return cached_table("widened208", sf_dir, build)
 
 
 @query("q208_iceberg_type_widening", oracle=_Q208_SQL, tags=("lake", "agg"))
@@ -998,10 +968,9 @@ GROUP BY c.c_mktsegment
 def _stats_join_tables(spark: SparkSession, sf_dir: str) -> "tuple[str, str]":
     from march_mania_spark_lakehouse_spark.sources import iceberg
 
-    root = _cached_root(sf_dir, "statsjoin210", src_table="customer")
-    ot = os.path.join(root, "orders_ice")
-    ct = os.path.join(root, "cust_ice")
-    if iceberg.current_version(ot) is None:
+    def build(root: str) -> None:
+        ot = os.path.join(root, "orders_ice")
+        ct = os.path.join(root, "cust_ice")
         orders = catalog.load(spark, "orders", sf_dir).select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -1012,7 +981,9 @@ def _stats_join_tables(spark: SparkSession, sf_dir: str) -> "tuple[str, str]":
         iceberg.create(cust, ct, stat_cols=["o_custkey"])
         iceberg.write_statistics(spark, ot, ["o_custkey"], k=256)
         iceberg.write_statistics(spark, ct, ["o_custkey"], k=256)
-    return ot, ct
+
+    root = cached_table("statsjoin210", sf_dir, build)
+    return os.path.join(root, "orders_ice"), os.path.join(root, "cust_ice")
 
 
 @query("q210_stats_driven_join", oracle=_Q210_SQL, tags=("lake", "join", "agg"))
@@ -1056,23 +1027,13 @@ GROUP BY 1, 2
 
 
 def _partitioned_clone_table(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-cached publish: partitioned source (bucket-of-5 hive
-    layout) → rename o_totalprice→price and mod5→bucket5 → shallow
-    clone → DELETE partition '4' on the CLONE only. Returns the clone
-    path."""
+    """Publish: partitioned source (bucket-of-5 hive layout) → rename
+    o_totalprice→price and mod5→bucket5 → shallow clone → DELETE
+    partition '4' on the CLONE only. Returns the clone path."""
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    import shutil
-
-    root = _cached_root(sf_dir, "delta_part_clone")
-    src, clone = os.path.join(root, "src"), os.path.join(root, "clone")
-    # the publish below is multi-step: guard on the TERMINAL state
-    # (clone v1 = clone commit + delete commit) and rebuild from
-    # scratch otherwise — a crash anywhere mid-publish (after
-    # create(src), or between clone and delete) must not leave a
-    # half-built cache that create() refuses or the oracle mismatches
-    if delta_log.latest_version(clone) != 1:
-        shutil.rmtree(root, ignore_errors=True)
+    def build(root: str) -> None:
+        src, clone = os.path.join(root, "src"), os.path.join(root, "clone")
         orders = catalog.load(spark, "orders", sf_dir).filter(
             F.col("o_orderkey") % 3 == 0
         ).withColumn("mod5", (F.col("o_orderkey") % 5).cast("string"))
@@ -1083,7 +1044,9 @@ def _partitioned_clone_table(spark: SparkSession, sf_dir: str) -> str:
         delta_log.rename_column(src, "mod5", "bucket5")
         delta_log.shallow_clone(src, clone)
         delta_log.delete_where(spark, clone, "bucket5 = '4'")
-    return clone
+
+    root = cached_table("delta_part_clone", sf_dir, build)
+    return os.path.join(root, "clone")
 
 
 @query("q212_delta_partitioned_clone", oracle=_Q212_SQL, tags=("lake", "agg"))
@@ -1142,16 +1105,7 @@ GROUP BY change_type
 def _cdf_updated_table(spark: SparkSession, sf_dir: str) -> str:
     from march_mania_spark_lakehouse_spark.sources import delta_log
 
-    root = _cached_root(sf_dir, "cdf213").replace(
-        "spark_graft_iceberg", "spark_graft_delta"
-    )
-    table = os.path.join(root, "orders_cdf")
-    # terminal state is v2 (create + update_where's delete/write pair);
-    # a crash mid-publish must rebuild, not serve a half-updated cache
-    if delta_log.latest_version(table) != 2:
-        import shutil
-
-        shutil.rmtree(table, ignore_errors=True)
+    def build(table: str) -> None:
         orders = catalog.load(spark, "orders", sf_dir).select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
         )
@@ -1165,7 +1119,8 @@ def _cdf_updated_table(spark: SparkSession, sf_dir: str) -> str:
                 "o_totalprice": F.col("o_totalprice") * F.lit(1.5),
             },
         )
-    return table
+
+    return cached_table("cdf213", sf_dir, build)
 
 
 @query("q213_delta_cdf_update_pairs", oracle=_Q213_SQL, tags=("lake", "agg"))

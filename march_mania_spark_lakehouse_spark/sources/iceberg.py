@@ -66,7 +66,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from march_mania_spark_lakehouse_spark.sources import avro_ocf
+from march_mania_spark_lakehouse_spark.sources import avro_ocf, lineage
 from march_mania_spark_lakehouse_spark.sources.local_rows import local_df
 
 FORMAT_VERSION = 2
@@ -2741,16 +2741,6 @@ def snapshot_diff_changelog(
         f["name"]
         for f in meta["schemas"][meta["current-schema-id"]]["fields"]
     ]
-    old = read_lineage(spark, table, from_snapshot).select(
-        *[F.col(n).alias(f"__old_{n}") for n in names],
-        F.col("_row_id"),
-        F.col("_last_updated_sequence_number").alias("__old_lus"),
-    )
-    new = read_lineage(spark, table, sid_new).select(
-        *names, "_row_id",
-        F.col("_last_updated_sequence_number").alias("__new_lus"),
-    )
-    both = new.join(old, "_row_id", "full_outer")
     # a null _row_id would silently split one row into a fake
     # insert+delete pair; refuse. The validation pass only runs when
     # the METADATA admits the possibility (some live entry inherits no
@@ -2782,52 +2772,22 @@ def snapshot_diff_changelog(
                     return True
         return False
 
-    if _may_have_null_ids(from_snapshot) or _may_have_null_ids(sid_new):
-        if both.filter(F.col("_row_id").isNull()).limit(1).count() > 0:
-            raise ValueError(
-                "a snapshot contains rows without row ids (written "
-                "before the v3 upgrade); identity-keyed diffing needs "
-                "identities"
-            )
-    # SINGLE-PASS classification (optimization round 13, guide §2.4):
-    # the previous four filter-branches-of-one-join union made the
-    # physical plan contain four copies of the join subtree (eight
-    # lineage scans); composed into the IVM refreshes this compounded
-    # to 94-scan/240-Exchange plans (plans/r13/q232_before.txt). One
-    # row of `both` instead emits 0-2 change rows via a typed array +
-    # explode — identical row set, one join, two scans.
-    def _new_row(ct: str):
-        return F.struct(
-            *[F.col(n).alias(n) for n in names],
-            F.col("_row_id").alias("_row_id"),
-            F.lit(ct).alias("_change_type"),
-        )
+    def _check_ids(both: DataFrame) -> None:
+        if _may_have_null_ids(from_snapshot) or _may_have_null_ids(sid_new):
+            if both.filter(F.col("_row_id").isNull()).limit(1).count() > 0:
+                raise ValueError(
+                    "a snapshot contains rows without row ids (written "
+                    "before the v3 upgrade); identity-keyed diffing needs "
+                    "identities"
+                )
 
-    def _old_row(ct: str):
-        return F.struct(
-            *[F.col(f"__old_{n}").alias(n) for n in names],
-            F.col("_row_id").alias("_row_id"),
-            F.lit(ct).alias("_change_type"),
-        )
-
-    is_ins = F.col("__old_lus").isNull()
-    is_del = F.col("__new_lus").isNull()
-    is_upd = (
-        F.col("__old_lus").isNotNull()
-        & F.col("__new_lus").isNotNull()
-        & (F.col("__new_lus") > F.col("__old_lus"))
+    return lineage.snapshot_diff(
+        read_lineage(spark, table, from_snapshot),
+        read_lineage(spark, table, sid_new),
+        names,
+        "_last_updated_sequence_number",
+        _check_ids,
     )
-    emit = F.array_compact(
-        F.array(
-            F.when(is_ins, _new_row("insert")).when(
-                is_upd, _new_row("update_postimage")
-            ),
-            F.when(is_del, _old_row("delete")).when(
-                is_upd, _old_row("update_preimage")
-            ),
-        )
-    )
-    return both.select(F.explode(emit).alias("__c")).select("__c.*")
 
 
 def _apply_delete_files(
